@@ -88,9 +88,6 @@ def _pagerank_oracle(n_iters: int = G.N_ITERS,
         "collected state) is the 100 TB-legal one.",
 )
 def q_graph_pagerank_topk(spark, sf_dir):
-    # runs on the byte-coalesced sibling via the registry wrapper
-    # (queries/_byte_coalesced.py): 32 tiny per-round partitions were
-    # pure scheduler latency — the 8-core bench BEAT 32-core 0.40x here
     ev = load_table(spark, sf_dir, "events")
     ranked = G.pagerank_fixedpoint(G.click_graph(ev))
     w = Window.orderBy(F.desc("rank"), F.asc("node"))

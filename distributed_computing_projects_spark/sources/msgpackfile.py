@@ -227,7 +227,8 @@ def _adapter(sql_type: str):
             return None
         if want == "bigint":
             return (v if isinstance(v, int)
-                    and not isinstance(v, bool) else None)
+                    and not isinstance(v, bool)
+                    and -(1 << 63) <= v < (1 << 63) else None)
         if want == "double":
             if isinstance(v, float):
                 return v

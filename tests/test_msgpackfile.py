@@ -95,6 +95,9 @@ def test_spark_read_with_ddl_adapters(tmp_path, spark):
              "flag": i % 2 == 0,
              "writer_only": {"nested": i}}
             for i in range(40)]
+    # uint64 values past bigint null the cell, never fail the query
+    vals.append({"event_id": 40, "user_id": (1 << 64) - 1,
+                 "event_type": "k1", "value": 60.0, "flag": True})
     with open(tmp_path / "part-0.msgpack", "wb") as f:
         f.write(build_msgpack_dump(vals))
         f.write(encode({"event_id": 999})[:-1])  # torn tail
@@ -108,7 +111,7 @@ def test_spark_read_with_ddl_adapters(tmp_path, spark):
                   r.flag) for r in df.collect())
     assert got == [(i, 100 + i, f"k{i % 3}",
                     None if i % 5 == 0 else i * 1.5, i % 2 == 0)
-                   for i in range(40)]
+                   for i in range(40)] + [(40, None, "k1", 60.0, True)]
 
 
 def test_cli_msgpack_scan(spark, tmp_path, capsys):

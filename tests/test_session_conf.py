@@ -1,55 +1,19 @@
-"""The per-query runtime-conf seam (session.derived_session /
-byte_coalesced) and the production-scale conf passthrough
-(get_spark(extra_conf=...)): the 100 TB recommendation documented in
-OPTIMIZATION_r16/r17 must be EXECUTABLE through these seams while the
-bench session stays byte-identical — pinned here so config guidance
-can't rot into prose."""
+"""The session-wide coalescing policy and the production-scale conf
+passthrough (get_spark(extra_conf=...)): the 100 TB recommendation
+documented in OPTIMIZATION_r16/r17 must be EXECUTABLE through this seam
+while the contract session keeps the engine defaults — pinned here so
+config guidance can't rot into prose."""
 
 from __future__ import annotations
 
-from distributed_computing_projects_spark.session import (
-    BYTE_COALESCE_CONFS,
-    byte_coalesced,
-    derived_session,
-    get_spark,
-)
+from distributed_computing_projects_spark.session import get_spark
 
 
-def test_derived_session_scopes_conf_and_leaves_base(spark):
-    base_before = {
-        k: spark.conf.get(k, None) for k in BYTE_COALESCE_CONFS
-    }
-    sib = byte_coalesced(spark)
-    assert sib is not spark
-    # same SparkContext: same executors, caches, JVM
-    assert sib.sparkContext is spark.sparkContext
-    for k, v in BYTE_COALESCE_CONFS.items():
-        assert sib.conf.get(k) == v
-    # the base session's runtime conf is untouched
-    for k, v in base_before.items():
-        assert spark.conf.get(k, None) == v
-    # the flip is real: parallelismFirst differs across the boundary
-    k = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    assert spark.conf.get(k) == "true" and sib.conf.get(k) == "false"
-
-
-def test_derived_session_is_memoized_per_base_and_confs(spark):
-    a = byte_coalesced(spark)
-    b = byte_coalesced(spark)
-    assert a is b  # bench reps reuse one sibling, no SessionState leak
-    c = derived_session(spark, {"spark.sql.shuffle.partitions": "7"})
-    assert c is not a
-    assert c.conf.get("spark.sql.shuffle.partitions") == "7"
-
-
-def test_derived_session_inherits_builder_confs(spark):
-    """Builder-time confs (AQE on, UTC timezone, broadcast threshold)
-    live in the context conf, so a sibling keeps the engine contract."""
-    sib = byte_coalesced(spark)
-    for k in ("spark.sql.adaptive.enabled",
-              "spark.sql.session.timeZone",
-              "spark.sql.autoBroadcastJoinThreshold"):
-        assert sib.conf.get(k) == spark.conf.get(k)
+def test_contract_session_coalesces_by_bytes(spark):
+    assert spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false"
+    assert spark.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true"
 
 
 def test_get_spark_extra_conf_carries_production_settings():
@@ -57,8 +21,9 @@ def test_get_spark_extra_conf_carries_production_settings():
     seam (conf names checked against this Spark version by actually
     setting them), without touching any other session's conf."""
     prod = {
+        # the non-default value, so the override is what lands
         "spark.sql.adaptive.coalescePartitions.parallelismFirst":
-            "false",
+            "true",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256m",
     }
     from pyspark.sql import SparkSession
